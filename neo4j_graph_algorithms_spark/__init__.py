@@ -5,9 +5,9 @@ reference `mneedham/neo4j-graph-algorithms` (Java/Neo4j, surveyed in
 /root/repo/SURVEY.md), re-expressed in idiomatic PySpark: graphs are
 pairs of DataFrames (`nodes`, `edges`), algorithm kernels are
 driver-side superstep loops issuing declarative DataFrame plans
-(joins + aggregations + windows), with vectorized pandas/Arrow UDF
-fast paths for per-partition CSR gather-scatter, explicit
-partitioning / skew handling, and checkpointed, resumable supersteps.
+(joins + aggregations + windows), with explicit skew handling
+(salting, two-phase aggregation) and checkpointed, resumable
+supersteps.
 
 Public surface (mirrors the reference's 47 `algo.*` procedures; see
 SURVEY.md §2.c and `runner.list_procedures()`):
@@ -29,10 +29,11 @@ SURVEY.md §2.c and `runner.list_procedures()`):
 - `operators.dedup`, `operators.similarity`, `operators.text`,
   `operators.multimodal` — large-scale training-data pipeline ops
 - `graph` — graph normalization layer (the "GraphLoader" analogue)
-- `plans.partitioning` — degree-budget partitioner, salting,
-  high-degree vertex splitting
-- `plans.checkpointing` — superstep checkpoint/restore with
-  per-partition lineage + convergence metrics
+- `plans.partitioning` — distributed two-level rank scan (id
+  densification, source numbering)
+- `plans.checkpointing` — the superstep driver: checkpoint/restore
+  with per-partition lineage + convergence metrics, termination, one
+  history schema
 - `sources.link_extract` — repo-file table -> edge table (Arrow UDF,
   sha256 invariant)
 """

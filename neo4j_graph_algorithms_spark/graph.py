@@ -138,8 +138,7 @@ def sort_adjacency(
     search `exists` probes and merge-intersections become possible on
     the materialized layout (parquet written from this frame also
     delta-encodes dst runs better — the Huge back-end's vlong/delta
-    trick for free), and a CSR build (`plans/partitioning.py`) can scan
-    each group contiguously without re-sorting.
+    trick for free).
     """
     n = num_partitions or edges.sparkSession.sparkContext.defaultParallelism
     return edges.repartition(n, SRC).sortWithinPartitions(SRC, DST)

@@ -248,7 +248,7 @@ def betweenness(
 
     acc: DataFrame | None = None
     deepest = 0
-    with adaptive_disabled(spark):
+    with adaptive_disabled(spark, termination):
         for w in range(n_waves):
             wave_src = (
                 sources.filter(F.col("_wave") == w).select("id")

@@ -31,13 +31,11 @@ pre-aggregation by (node, label) prevents.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import IterationCache, adaptive_disabled, check_termination
+from ..plans.checkpointing import Supersteps
 
 
 def label_propagation(
@@ -59,9 +57,12 @@ def label_propagation(
     the label frame, so restarting from superstep k's labels replays
     supersteps k+1.. identically (deterministic argmax tie-break; same
     north-rule "resumable" shape as `pagerank(resume=True)`).
+
+    ``ranIterations`` equals the driver's ``iterations``; ``changed`` in
+    the history is the number of labels that moved in the superstep.
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = Supersteps(spark, checkpoint_dir, checkpoint_every, termination, resume)
     nodes = graph.nodes
 
     # voting edges: node <- (neighbor, rel weight); OUTGOING means a node
@@ -128,26 +129,16 @@ def label_propagation(
         nw = nodes.select(F.col("id").cast(id_t).alias("id"), F.lit(1.0).alias("nw"))
     nw = nw.persist()
 
-    cache = IterationCache(
-        spark, checkpoint_dir, checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
-    start_it = 1
-    labels = None
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            step, state, _meta = latest
-            labels = state.select(
-                F.col("id").cast(id_t).alias("id"),
-                F.col("label").cast(id_t).alias("label"),
-            )
-            start_it = step + 1
-    if labels is None:
-        labels = cache.step(init, 0)
+    restored = loop.restore()
+    if restored:
+        state, _meta = restored
+        labels = state.select(
+            F.col("id").cast(id_t).alias("id"),
+            F.col("label").cast(id_t).alias("label"),
+        )
+    else:
+        labels = loop.materialize(init, 0)
 
-    ran = start_it - 1
-    converged = False
     w = Window.partitionBy("node").orderBy(F.desc("vote"), F.asc("nbr_label"))
 
     def half_step(labels: DataFrame, parity: int) -> DataFrame:
@@ -175,28 +166,17 @@ def label_propagation(
             "id", F.coalesce(F.col("new_label"), F.col("label")).alias("label")
         )
 
-    with adaptive_disabled(spark):
-        for it in range(start_it, iterations + 1):
-            check_termination(spark, termination, it)
-            stepped = cache.step(half_step(half_step(labels, 0), 1), it)
-            changed = (
-                stepped.join(labels.withColumnRenamed("label", "prev"), "id")
-                .filter(F.col("label") != F.col("prev"))
-                .count()
-            )
-            cache.history[-1]["changed"] = changed
-            labels = stepped
-            ran = it
-            if changed == 0:
-                converged = True
-                break
+    for it in loop.steps(iterations):
+        stepped = loop.materialize(half_step(half_step(labels, 0), 1), it)
+        changed = (
+            stepped.join(labels.withColumnRenamed("label", "prev"), "id")
+            .filter(F.col("label") != F.col("prev"))
+            .count()
+        )
+        labels = stepped
+        loop.record(changed, converged=changed == 0)
 
-    stats = {
-        "ranIterations": ran,
-        "didConverge": converged,
-        "computeMillis": int((time.time() - t0) * 1000),
-        "history": cache.history,
-    }
+    stats = loop.stats(ranIterations=loop.last)
     e.unpersist()
     nw.unpersist()
     labels = labels.select(

@@ -121,7 +121,7 @@ def louvain(
             "id", F.coalesce("new_c", "community").alias("community")
         )
 
-    with adaptive_disabled(spark):
+    with adaptive_disabled(spark, termination):
         comm = truncate_plan(comm)
         for it in range(1, iterations + 1):
             check_termination(spark, termination, it)

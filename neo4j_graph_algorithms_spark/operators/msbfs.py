@@ -187,7 +187,7 @@ def _run_wave_bfs(
             frames.clear()
             frames.append(truncate_plan(acc))
 
-    with adaptive_disabled(spark):
+    with adaptive_disabled(spark, termination):
         for lo, hi in waves:
             wave_numbered = (
                 numbered if len(waves) == 1

@@ -71,7 +71,7 @@ def mst(
     # distinct() on `picks`.
     chosen_frames: list[DataFrame] = []
     rounds = 0
-    with adaptive_disabled(spark):
+    with adaptive_disabled(spark, termination):
         comp = truncate_plan(comp)
         for _ in range(max_rounds):
             check_termination(spark, termination, rounds)

@@ -24,39 +24,29 @@ Deliberate divergences (documented in SURVEY.md §4):
   `PageRank.java:54,464,512`) — a JVM atomic-contention workaround, not
   semantics; float64 DataFrame math is strictly more accurate.
 - the reference's degree-budget thread partitions
-  (`PageRank.java:281-309`) become either Catalyst shuffle partitions
-  (plan="dataframe") or an explicit cumulative-degree partitioner
-  (plan="csr", `plans/partitioning.py`).
+  (`PageRank.java:281-309`) become Catalyst shuffle partitions of the
+  src-partitioned edge cache.
 
-Two physical plans (differential-tested against each other):
-
-- ``plan="dataframe"`` — pure joins + two-phase hash aggregation; the
-  shuffle-per-superstep is `edges ⨝ active_deltas` then
-  `groupBy(dst).sum`. Catalyst does map-side partial aggregation, AQE
-  splits skewed reducers.
-- ``plan="csr"`` — edges are degree-budget-partitioned once and cached;
-  each superstep runs a vectorized numpy gather-scatter
-  (`np.add.at`) inside `applyInPandas` per partition, emitting
-  pre-combined (dst, partial) messages — the direct analogue of the
-  reference's per-partition private score arrays + transpose exchange
-  (`PageRank.java:56-84,311-381`), with the final `groupBy(dst).sum`
-  as the exchange.
+Physical plan: pure joins + two-phase hash aggregation; the
+shuffle-per-superstep is `edges ⨝ active_deltas` then
+`groupBy(dst).sum`, with Catalyst's map-side partial aggregation.
 
 Skew: optional salting (``salt_buckets``) forces an explicit two-phase
 aggregation `groupBy(salt, dst) → groupBy(dst)` for power-law in-degree
-hubs; high-degree *sources* are handled by the degree-budget partitioner
-splitting their edge ranges across partitions.
+hubs (differential-tested against the plain plan).
+
+The loop runs on the shared superstep driver
+(`plans/checkpointing.Supersteps`): resume, durable snapshots,
+termination and the per-superstep history record.
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..graph import Graph
-from ..plans.checkpointing import IterationCache, adaptive_disabled, check_termination
+from ..plans.checkpointing import Supersteps
 
 
 def _messages_dataframe(edges_inv: DataFrame, active: DataFrame, damping: float) -> DataFrame:
@@ -88,41 +78,11 @@ def _messages_salted(
     return partial.groupBy("dst").agg((F.lit(damping) * F.sum("pm")).alias("recv"))
 
 
-def _messages_csr(edges_part: DataFrame, active: DataFrame, damping: float) -> DataFrame:
-    """Per-partition vectorized gather-scatter (SpMV) via applyInPandas.
-
-    `edges_part` carries a precomputed `part_id` (degree-budget
-    partitioner). Each group gathers its active deltas, scatters
-    contributions onto local dst bins with `np.add.at` (pure numpy — no
-    per-row Python), and emits pre-combined (dst, partial) rows; the
-    final `groupBy(dst).sum` is the inter-partition exchange.
-    """
-    import numpy as np
-    import pandas as pd
-
-    def spmv(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return pd.DataFrame({"dst": np.array([], dtype=np.int64),
-                                 "pm": np.array([], dtype=np.float64)})
-        contrib = pdf["delta"].to_numpy() * pdf["inv_deg"].to_numpy()
-        dst = pdf["dst"].to_numpy()
-        # local dense reindex of dst ids, then vectorized scatter-add
-        uniq, inv = np.unique(dst, return_inverse=True)
-        acc = np.zeros(len(uniq), dtype=np.float64)
-        np.add.at(acc, inv, contrib)
-        return pd.DataFrame({"dst": uniq, "pm": acc})
-
-    joined = edges_part.join(active, "src")
-    partial = joined.groupBy("part_id").applyInPandas(spmv, "dst long, pm double")
-    return partial.groupBy("dst").agg((F.lit(damping) * F.sum("pm")).alias("recv"))
-
-
 def pagerank(
     graph: Graph,
     damping: float = 0.85,
     max_iterations: int = 20,
     tolerance: float | None = None,
-    plan: str = "dataframe",
     salt_buckets: int = 1,
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 5,
@@ -141,8 +101,8 @@ def pagerank(
     `algo/.../PageRankProc.java:143-147`): each node pushes
     ``damping * delta * w(u,v) / Σ_out w(u,·)`` instead of the uniform
     ``1/outDegree`` split. Only the per-edge push fraction changes — the
-    delta recurrence, dangling convention (push nothing), and both
-    physical plans are untouched, because the kernel already carries the
+    delta recurrence, dangling convention (push nothing), and the
+    salted plan are untouched, because the kernel already carries the
     fraction as a per-edge ``inv_deg`` column. Edges with non-positive
     weight are dropped from the push (they contribute no mass, and a
     node whose out-weights sum to 0 behaves as dangling). With all
@@ -187,7 +147,11 @@ def pagerank(
 
     stats mirrors the reference's result row
     (`algo/.../results/PageRankScore.java` Stats: nodes, iterations,
-    computeMillis) plus per-superstep convergence history.
+    computeMillis) plus the driver's per-superstep history, whose
+    records add ``max_delta`` (None without a tolerance) and
+    ``folded``; ``changed`` is the number of nodes that received a
+    delta. ``checkpoints`` lists the init and every fold's
+    materialization.
 
     Execution shape (the delta-push invariant rank_t = rank_0 +
     Σ deltas received, `impl/PageRank.java:505-517`, lets the loop
@@ -204,7 +168,7 @@ def pagerank(
     — fixed scheduling overhead is the enemy of scaling efficiency.
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = Supersteps(spark, checkpoint_dir, checkpoint_every, termination, resume)
 
     # int-id compression (shared Heavy-vs-Huge analogue; bound scan
     # cached per snapshot via graph.id_type). inv_deg and messages stay
@@ -216,7 +180,7 @@ def pagerank(
         raise ValueError("weighted and article are mutually exclusive")
     if weighted:
         # per-edge push fraction w/Σw replaces 1/deg; everything
-        # downstream (both plans, salting, folds) is weight-agnostic
+        # downstream (salting, folds) is weight-agnostic
         e_w = graph.edges.filter(F.col("weight") > 0).select(
             F.col("src").cast(id_t).alias("src"),
             F.col("dst").cast(id_t).alias("dst"),
@@ -240,36 +204,22 @@ def pagerank(
             "src", "dst", (F.lit(1.0) / denom).alias("inv_deg")
         )
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    if plan == "csr":
-        from ..plans.partitioning import degree_budget_partition
-
-        edges_inv = degree_budget_partition(edges_with_inv, num_partitions=n_parts).persist()
-    else:
-        # hash-partition the edge table by src ONCE and cache: every
-        # superstep's `edges ⨝ active` then reuses the cached
-        # partitioning (InMemoryRelation preserves outputPartitioning),
-        # so only the small delta frame shuffles — the edge table never
-        # moves again. This is the property that keeps per-superstep
-        # shuffle volume O(V) instead of O(E) at 100 TB scale.
-        edges_inv = edges_with_inv.repartition(n_parts, "src").persist()
+    # hash-partition the edge table by src ONCE and cache: every
+    # superstep's `edges ⨝ active` then reuses the cached partitioning
+    # (InMemoryRelation preserves outputPartitioning), so only the small
+    # delta frame shuffles — the edge table never moves again. This is
+    # the property that keeps per-superstep shuffle volume O(V) instead
+    # of O(E) at 100 TB scale.
+    edges_inv = edges_with_inv.repartition(n_parts, "src").persist()
     edges_inv.count()
 
     alpha = 1.0 - damping
-    cache = IterationCache(
-        spark,
-        checkpoint_dir=checkpoint_dir,
-        checkpoint_every=checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
 
-    start_step = 0
     def send(active: DataFrame) -> DataFrame:
         """d·Mᵀ·active — (id, delta) messages for an (src-named-id,
         delta) frame; shared by the superstep push and the warm-start
         residual pass."""
-        if plan == "csr":
-            msgs = _messages_csr(edges_inv, active, damping)
-        elif salt_buckets > 1:
+        if salt_buckets > 1:
             msgs = _messages_salted(edges_inv, active, damping, salt_buckets)
         else:
             msgs = _messages_dataframe(edges_inv, active, damping)
@@ -279,13 +229,10 @@ def pagerank(
     if signed and source_nodes is not None:
         raise ValueError("init_ranks and source_nodes are mutually exclusive")
 
-    state = None
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            start_step, state, _meta = latest
-            start_step += 1
-    if state is None:
+    restored = loop.restore()
+    if restored:
+        state, _meta = restored
+    else:
         if init_ranks is not None:
             # warm start: delta₀ = α + d·Mᵀ·r₀ − r₀ (one O(E) pass);
             # appended nodes absent from the estimate start cold at α
@@ -327,8 +274,7 @@ def pagerank(
                 F.col("id").cast(id_t).alias("id"),
                 F.lit(alpha).alias("rank"), F.lit(alpha).alias("delta"),
             )
-        state = cache.step(state, 0, {"phase": "init"}, value_col="delta")
-        start_step = 1
+        state = loop.materialize(state, 0, value_col="delta")
 
     def push(cur: DataFrame) -> DataFrame:
         """One delta superstep: cur(id, active delta) → next deltas.
@@ -347,9 +293,6 @@ def pagerank(
         (F.col("delta") != 0.0) if signed else (F.col("delta") > 0)
     )
 
-    history: list[dict] = []
-    ran = 0
-    converged = False
     fold = max(1, fuse)
     acc = state.select("id", "rank")
     cur = state.select("id", "delta").filter(active_pred)
@@ -374,66 +317,44 @@ def pagerank(
             "id", "rank", F.coalesce(F.col("delta"), F.lit(0.0)).alias("delta")
         )
 
-    with adaptive_disabled(spark):
-        for it in range(start_step, max_iterations + 1):
-            check_termination(spark, termination, it)
-            t_it = time.time()
-            # persist() (not localCheckpoint) keeps the hash(dst) output
-            # partitioning visible to Catalyst, so the next superstep's
-            # edge join needs NO exchange; the InMemoryRelation chain
-            # stays ≤ fuse deep because every fold below re-roots it
-            cur = push(cur).persist()
-            cur.count()
-            pending.append(cur)
-            ran = it
-            if tolerance is not None:
-                max_delta = (
-                    cur.agg(F.max(F.abs(F.col("delta")))).collect()[0][0]
-                    if signed
-                    else cur.agg(F.max("delta")).collect()[0][0]
-                ) or 0.0
-                if max_delta < tolerance:
-                    converged = True
-            else:
-                max_delta = None
-            last = converged or it == max_iterations
-            folded = False
-            if len(pending) >= fold or last or (
-                checkpoint_dir is not None and it % cache.checkpoint_every == 0
-            ):
-                # the fold doubles as lineage truncation: the folded
-                # state materializes through IterationCache (durable
-                # parquet or eager localCheckpoint), and the frontier is
-                # RE-ROOTED at that materialized state so every
-                # per-block chain hangs off exactly one truncated root —
-                # unions mixing several localCheckpoint roots defeat
-                # Catalyst's cache lookup and recompute the chains
-                # (measured: 11-frame mixed-root fold 49s vs 1.2s)
-                state = cache.step(
-                    fold_state(acc, pending, cur), it, None, value_col="delta"
-                )
-                acc = state.select("id", "rank")
-                for p in pending:
-                    p.unpersist()
-                pending = []
-                cur = state.select("id", "delta").filter(active_pred)
-                folded = True
-            history.append({
-                "superstep": it, "max_delta": max_delta,
-                "secs": round(time.time() - t_it, 2), "folded": folded,
-            })
-            if last:
-                break
+    for it in loop.steps(max_iterations):
+        # persist() (not localCheckpoint) keeps the hash(dst) output
+        # partitioning visible to Catalyst, so the next superstep's
+        # edge join needs NO exchange; the InMemoryRelation chain
+        # stays ≤ fuse deep because every fold below re-roots it
+        cur = push(cur).persist()
+        changed = cur.count()
+        pending.append(cur)
+        max_delta = None
+        if tolerance is not None:
+            max_delta = (
+                cur.agg(F.max(F.abs(F.col("delta")))).collect()[0][0]
+                if signed
+                else cur.agg(F.max("delta")).collect()[0][0]
+            ) or 0.0
+        converged = max_delta is not None and max_delta < tolerance
+        folded = (
+            len(pending) >= fold or converged or it == max_iterations
+            or loop.durable(it)
+        )
+        if folded:
+            # the fold doubles as lineage truncation: the folded state
+            # materializes through the driver (durable parquet or eager
+            # truncation), and the frontier is RE-ROOTED at that
+            # materialized state so every per-block chain hangs off
+            # exactly one truncated root — unions mixing several
+            # localCheckpoint roots defeat Catalyst's cache lookup and
+            # recompute the chains (measured: 11-frame mixed-root fold
+            # 49s vs 1.2s)
+            state = loop.materialize(fold_state(acc, pending, cur), it, value_col="delta")
+            acc = state.select("id", "rank")
+            for p in pending:
+                p.unpersist()
+            pending = []
+            cur = state.select("id", "delta").filter(active_pred)
+        loop.record(changed, converged=converged, max_delta=max_delta, folded=folded)
 
     result = acc.select(F.col("id").cast("long").alias("id"), "rank")
-    stats = {
-        "nodes": graph.node_count(),
-        "iterations": ran,
-        "didConverge": converged,
-        "damping": damping,
-        "computeMillis": int((time.time() - t0) * 1000),
-        "history": history,
-        "checkpoints": cache.history,
-    }
+    stats = loop.stats(nodes=graph.node_count(), damping=damping)
     edges_inv.unpersist()
     return result, stats

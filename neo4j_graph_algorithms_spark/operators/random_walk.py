@@ -36,18 +36,12 @@ degrees < 2^13 on a 64-bit hash — negligible); independence across
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..graph import Graph
-from ..plans.checkpointing import (
-    IterationCache,
-    adaptive_disabled,
-    check_termination,
-)
+from ..plans.checkpointing import Supersteps
 
 
 def random_walks(
@@ -74,9 +68,13 @@ def random_walks(
     next-hop choice is a pure hash of (source, node, rep, step, seed) —
     continues the IDENTICAL walks (caller must pass the same graph/
     seed/walk args, as with every resumable kernel here).
+
+    One history record per walk step; ``changed`` is None (a step only
+    tests the frontier for emptiness), and ``didConverge`` means every
+    walk ended at a dangling node before ``walk_length``.
     """
     spark = graph.edges.sparkSession
-    t0 = time.time()
+    loop = Supersteps(spark, checkpoint_dir, checkpoint_every, termination, resume)
     id_t = graph.id_type()
 
     w = Window.partitionBy("src").orderBy("dst")
@@ -102,25 +100,16 @@ def random_walks(
     )
     adj.count()
 
-    cache = IterationCache(
-        spark, checkpoint_dir, checkpoint_every,
-        collect_partition_metrics=checkpoint_dir is not None,
-    )
-    start_step = 1
-    steps: list[DataFrame] | None = None
-    if resume and checkpoint_dir:
-        latest = cache.latest()
-        if latest is not None:
-            ck_step, acc, _meta = latest
-            acc = acc.localCheckpoint(eager=True)
-            frontier = acc.filter(F.col("step") == ck_step).select(
-                F.col("source").cast(id_t).alias("source"),
-                "rep",
-                F.col("node").cast(id_t).alias("node"),
-            ).localCheckpoint(eager=True)
-            steps = [acc]
-            start_step = ck_step + 1
-    if steps is None:
+    restored = loop.restore()
+    if restored:
+        acc = restored[0].localCheckpoint(eager=True)
+        frontier = acc.filter(F.col("step") == loop.last).select(
+            F.col("source").cast(id_t).alias("source"),
+            "rep",
+            F.col("node").cast(id_t).alias("node"),
+        ).localCheckpoint(eager=True)
+        steps = [acc]
+    else:
         src_nodes = (sources or graph.nodes.select("id")).select(
             F.col("id").cast(id_t).alias("source")
         )
@@ -132,35 +121,35 @@ def random_walks(
         )
         steps = [frontier.select("source", "rep", F.lit(0).alias("step"), "node")]
 
-    with adaptive_disabled(spark):
-        for step in range(start_step, walk_length + 1):
-            check_termination(spark, termination, step)
-            picked = frontier.join(deg, "node").select(
-                "source", "rep",
-                F.col("node").alias("src"),
-                F.pmod(
-                    F.xxhash64("source", "node", "rep", F.lit(step), F.lit(seed)),
-                    F.col("deg"),
-                ).cast("int").alias("rn"),
-            )
-            frontier = (
-                picked.join(adj, ["src", "rn"])
-                .select("source", "rep", F.col("dst").alias("node"))
-                .localCheckpoint(eager=True)
-            )
-            if frontier.isEmpty():
-                break
-            steps.append(
-                frontier.select("source", "rep", F.lit(step).alias("step"), "node")
-            )
-            if checkpoint_dir and step % checkpoint_every == 0:
-                # durable snapshot of the accumulated prefix (the lazy
-                # per-step frames union-fold exactly once per cadence —
-                # the standing BFS-family accumulation discipline)
-                acc = steps[0]
-                for s in steps[1:]:
-                    acc = acc.unionByName(s)
-                steps = [cache.step(acc, step)]
+    for step in loop.steps(walk_length):
+        picked = frontier.join(deg, "node").select(
+            "source", "rep",
+            F.col("node").alias("src"),
+            F.pmod(
+                F.xxhash64("source", "node", "rep", F.lit(step), F.lit(seed)),
+                F.col("deg"),
+            ).cast("int").alias("rn"),
+        )
+        frontier = (
+            picked.join(adj, ["src", "rn"])
+            .select("source", "rep", F.col("dst").alias("node"))
+            .localCheckpoint(eager=True)
+        )
+        if frontier.isEmpty():
+            loop.record(None, converged=True)
+            break
+        steps.append(
+            frontier.select("source", "rep", F.lit(step).alias("step"), "node")
+        )
+        if loop.durable(step):
+            # durable snapshot of the accumulated prefix (the lazy
+            # per-step frames union-fold exactly once per cadence —
+            # the standing BFS-family accumulation discipline)
+            acc = steps[0]
+            for s in steps[1:]:
+                acc = acc.unionByName(s)
+            steps = [loop.materialize(acc, step)]
+        loop.record(None)
 
     out = steps[0]
     for s in steps[1:]:
@@ -169,15 +158,13 @@ def random_walks(
         F.col("source").cast("long").alias("source"), "rep", "step",
         F.col("node").cast("long").alias("node"),
     )
-    stats = {
-        "nodes": graph.node_count(),
-        "walk_length": walk_length,
-        "walks_per_node": walks_per_node,
-        "steps_run": int(out.agg(F.max("step")).collect()[0][0] or 0),
-        "seed": seed,
-        "computeMillis": int((time.time() - t0) * 1000),
-    }
+    stats = loop.stats(
+        nodes=graph.node_count(),
+        walk_length=walk_length,
+        walks_per_node=walks_per_node,
+        steps_run=int(out.agg(F.max("step")).collect()[0][0] or 0),
+        seed=seed,
+    )
     adj.unpersist()
     deg.unpersist()
-    cache.close()
     return out, stats

@@ -81,7 +81,7 @@ def scc(
         assigned_frames.append(df)
 
     converged = False
-    with adaptive_disabled(spark):
+    with adaptive_disabled(spark, termination):
         # per-round state frames go through truncate_plan (not plain
         # localCheckpoint): active/color/reached all sit in diamond-
         # shaped update loops whose checkpoint-origin chains otherwise

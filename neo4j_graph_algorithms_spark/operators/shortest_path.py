@@ -81,7 +81,7 @@ def shortest_paths(
     )
     frontier = dist.filter(F.col("distance") < INF)
     ran = 0
-    with adaptive_disabled(spark):
+    with adaptive_disabled(spark, termination):
         dist = dist.localCheckpoint(eager=True)
         frontier = frontier.localCheckpoint(eager=True)
         for it in range(1, max_iterations + 1):
@@ -205,7 +205,7 @@ def delta_stepping(
             ((nd < F.col("distance")) & (nd < hi)).alias("_band"),
         )
 
-    with adaptive_disabled(spark):
+    with adaptive_disabled(spark, termination):
         # truncate_plan on the distance state: each relax references
         # dist AND the band (itself from the previous relax) — the
         # diamond whose checkpoint-origin chain otherwise grows
@@ -301,7 +301,7 @@ def all_shortest_paths_weighted(
     # final (checkpointed) distance frame — collected in a list and
     # unioned once, never re-materializing the O(V²) accumulator per wave
     result_frames: list[DataFrame] = []
-    with adaptive_disabled(spark):
+    with adaptive_disabled(spark, termination):
         for wv in range(n_waves):
             wave_src = (
                 nodes.filter(F.col("_wave") == wv).select("id")

@@ -1,5 +1,5 @@
-"""Superstep checkpointing with per-partition lineage + convergence
-metrics, and resumable iterative runs.
+"""The superstep driver: resume, materialization, termination and one
+history schema for every resumable kernel loop.
 
 The reference's superstep barrier is a thread-pool rendezvous
 (`impl/PageRank.java:344-374` — ComputeSteps re-submitted per iteration
@@ -9,14 +9,15 @@ are (a) unbounded lineage growth across tens of iterations and (b) no
 restart point for a 100 TB run that dies at superstep 37. This module
 solves both:
 
-- `IterationCache` — persist-count-unpersist cadence with optional
-  periodic truncation: either `localCheckpoint` (fast, lineage-only) or
-  a durable parquet checkpoint directory (resumable; the sandbox
-  stand-in for an Iceberg state table).
-- Every durable checkpoint writes `meta.json` with the superstep
-  number, convergence metric, and *per-partition* lineage metrics
-  (rows + partition-local convergence) so a resumed run can verify its
-  inputs before continuing.
+- `Supersteps` — the loop driver: per-step `truncate_plan` or, every
+  `checkpoint_every` steps, a durable parquet snapshot (resumable; the
+  single-machine stand-in for an Iceberg state table), resume from the latest
+  snapshot, the AQE-off scope, the termination check, and one history
+  record ``{superstep, secs, changed, checkpointed}`` per superstep.
+- Every durable snapshot writes `meta.json` with the superstep number
+  and *per-partition* lineage metrics (rows + partition-local
+  convergence) so a resumed run can verify its inputs before
+  continuing.
 """
 
 from __future__ import annotations
@@ -71,8 +72,6 @@ def check_termination(spark: SparkSession, termination, step: int | None = None)
       filesystem path: creating that file from any process requests
       termination (the external kill switch for a long run).
 
-    Also tags subsequent jobs with the group name so
-    `cancelJobGroup(name)` can interrupt the in-flight superstep.
     Raises `TerminatedError`; with a durable `checkpoint_dir` the run
     stays resumable from its last checkpoint.
     """
@@ -82,7 +81,6 @@ def check_termination(spark: SparkSession, termination, step: int | None = None)
         if termination():
             raise TerminatedError(f"run terminated cooperatively at step {step}")
         return
-    spark.sparkContext.setJobGroup(termination, "nga superstep loop", True)
     if termination in _FLAGGED or (
         (os.sep in termination or "/" in termination) and os.path.exists(termination)
     ):
@@ -152,22 +150,38 @@ def truncate_plan(df: DataFrame) -> DataFrame:
         return ck
 
 
+#: the local properties `SparkContext.setJobGroup` sets
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
 @contextmanager
-def adaptive_disabled(spark: SparkSession):
-    """Disable AQE for the duration of a superstep loop.
+def adaptive_disabled(spark: SparkSession, termination=None):
+    """Disable AQE for the duration of a superstep loop; with a string
+    ``termination``, run the loop's jobs in that job group so
+    `cancelJobGroup(name)` can interrupt the in-flight superstep. The
+    caller's AQE setting and job group are restored on exit, also when
+    the loop raises `TerminatedError`.
 
     AQE re-plans every materialization against fresh runtime stats —
     valuable for one-shot queries, pure overhead for an iterative loop
     whose per-superstep shapes are identical and already sized
     (measured ~40% per-superstep win on the PageRank loop). Skew is
-    handled structurally in the kernels (salting / two-phase agg /
-    degree-budget partitioning), not by runtime re-planning."""
+    handled structurally in the kernels (salting / two-phase agg), not
+    by runtime re-planning."""
+    sc = spark.sparkContext
+    named = isinstance(termination, str)
+    if named:
+        group = [sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS]
+        sc.setJobGroup(termination, "nga superstep loop", True)
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         yield
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev)
+        if named:
+            for k, v in zip(_JOB_GROUP_PROPS, group):
+                sc.setLocalProperty(k, v)
 
 
 def partition_metrics(df: DataFrame, value_col: str | None = None) -> list[dict]:
@@ -185,69 +199,58 @@ def partition_metrics(df: DataFrame, value_col: str | None = None) -> list[dict]
     return [r.asDict() for r in sorted(rows, key=lambda r: r["_pid"])]
 
 
-class IterationCache:
-    """persist → materialize → unpersist-previous, with optional durable
-    checkpoints every `checkpoint_every` steps."""
+class Supersteps:
+    """The superstep driver every resumable kernel loop runs on.
+
+    It owns the bookkeeping every kernel loop shares: resume from the
+    latest durable snapshot (`restore`), state materialization
+    (`materialize`), the AQE-off / job-group scope and termination
+    check (`steps`), one history record per superstep (`record`), and
+    the common stats keys (`stats`). The kernel keeps only its step
+    body::
+
+        loop = Supersteps(spark, checkpoint_dir, checkpoint_every, termination, resume)
+        restored = loop.restore()            # (state, meta) or None
+        state = ... if restored else loop.materialize(init, 0)
+        for it in loop.steps(max_iterations):
+            state = loop.materialize(step(state), it)
+            loop.record(changed, converged=changed == 0)
+        return state, loop.stats()
+
+    The only Spark actions here are those of `materialize` (the eager
+    truncation, or the durable write and its partition metrics);
+    ``changed`` is a count the step body already takes.
+    """
 
     def __init__(
         self,
         spark: SparkSession,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 5,
-        collect_partition_metrics: bool = False,
+        termination=None,
+        resume: bool = False,
     ):
+        self.t0 = time.time()
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
-        self.collect_partition_metrics = collect_partition_metrics
-        self._prev: DataFrame | None = None
+        self.termination = termination
+        self.resume = resume
+        self.last = 0  # last superstep reached, restored or executed
+        self.converged = False
         self.history: list[dict] = []
+        self.checkpoints: list[dict] = []
+        self._rec: dict | None = None
+        self._t = 0.0
         if checkpoint_dir:
             os.makedirs(checkpoint_dir, exist_ok=True)
 
-    def step(
-        self, df: DataFrame, superstep: int, metrics: dict | None = None, value_col: str | None = None
-    ) -> DataFrame:
-        """Materialize this superstep's state; returns the DataFrame to
-        use for the next iteration (re-read from checkpoint when a
-        durable snapshot was taken, truncating lineage)."""
-        durable = self.checkpoint_dir is not None and superstep % self.checkpoint_every == 0
-        meta = {"superstep": superstep, "ts": time.time(), **(metrics or {})}
-        if durable:
-            path = os.path.join(self.checkpoint_dir, f"step_{superstep:06d}")
-            df.write.mode("overwrite").parquet(os.path.join(path, "state"))
-            out = self.spark.read.parquet(os.path.join(path, "state"))
-            if self.collect_partition_metrics:
-                meta["partitions"] = partition_metrics(out, value_col)
-            with open(os.path.join(path, "meta.json"), "w") as f:
-                json.dump(meta, f)
-            # marker file written last => checkpoint is complete
-            with open(os.path.join(path, "_SUCCESS_META"), "w") as f:
-                f.write("ok")
-            self._gc(keep=2)
-        else:
-            # eager checkpoint EVERY step, with the origin-plan link
-            # severed (`truncate_plan`): materializes, truncates RDD
-            # lineage, AND truncates the LOGICAL origin chain. A plain
-            # persist() keeps the full logical tree (measured: per-step
-            # cost degrades 0.5s → tens of seconds within 8 iterations);
-            # a plain localCheckpoint() keeps the origin-plan reference,
-            # whose stats walk turns exponential past ~16 steps on any
-            # state with a frontier/accumulator diamond (see
-            # truncate_plan's docstring for the measured blowup).
-            out = truncate_plan(df)
-        if self._prev is not None:
-            try:
-                self._prev.unpersist()
-            except Exception:
-                pass
-        self._prev = out if not durable else None
-        self.history.append(meta)
-        return out
-
-    def latest(self) -> tuple[int, DataFrame, dict] | None:
-        """Most recent complete durable checkpoint, or None."""
-        if not self.checkpoint_dir or not os.path.isdir(self.checkpoint_dir):
+    def restore(self) -> tuple[DataFrame, dict] | None:
+        """(state, meta) of the latest complete durable snapshot when
+        resuming, else None. The loop then continues after the
+        snapshot's superstep; ``meta["history"]`` holds the history
+        recorded up to the snapshot."""
+        if not (self.resume and self.checkpoint_dir):
             return None
         steps = sorted(
             d
@@ -260,8 +263,80 @@ class IterationCache:
         path = os.path.join(self.checkpoint_dir, steps[-1])
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
-        df = self.spark.read.parquet(os.path.join(path, "state"))
-        return int(meta["superstep"]), df, meta
+        self.last = int(meta["superstep"])
+        return self.spark.read.parquet(os.path.join(path, "state")), meta
+
+    def durable(self, step: int) -> bool:
+        """True on the supersteps that take a durable snapshot."""
+        return self.checkpoint_dir is not None and step % self.checkpoint_every == 0
+
+    def materialize(
+        self, df: DataFrame, step: int, value_col: str | None = None, **meta
+    ) -> DataFrame:
+        """Materialize superstep ``step``'s state and return the frame to
+        iterate on. On the ``checkpoint_every`` cadence (with a
+        ``checkpoint_dir``) this is a durable parquet snapshot, re-read
+        so lineage starts there, with per-partition metrics (``value_col``
+        adds its max) and ``meta`` in ``meta.json``; otherwise an eager
+        `truncate_plan`. A plain persist() would keep the full logical
+        tree (measured: per-step cost 0.5 s → tens of seconds within 8
+        iterations), a plain localCheckpoint() the origin-plan chain
+        whose stats walk turns exponential past ~16 steps."""
+        rec = {"superstep": step, "durable": self.durable(step), **meta}
+        self.checkpoints.append(rec)
+        if not rec["durable"]:
+            return truncate_plan(df)
+        path = os.path.join(self.checkpoint_dir, f"step_{step:06d}")
+        df.write.mode("overwrite").parquet(os.path.join(path, "state"))
+        out = self.spark.read.parquet(os.path.join(path, "state"))
+        rec["partitions"] = partition_metrics(out, value_col)
+        if self._rec is not None and self._rec["superstep"] == step:
+            self._rec["checkpointed"] = True
+        with open(os.path.join(path, "meta.json"), "w") as f:
+            json.dump({**rec, "history": self.history}, f)
+        # marker file written last => checkpoint is complete
+        with open(os.path.join(path, "_SUCCESS_META"), "w") as f:
+            f.write("ok")
+        self._gc(keep=2)
+        return out
+
+    def steps(self, until: int):
+        """Yield the supersteps after the restored one up to ``until``,
+        with AQE off and the termination check before each. The loop
+        ends after a step recorded as converged; a kernel that leaves it
+        early (``break`` or an exception) closes the generator, which
+        restores the caller's AQE setting and job group."""
+        with adaptive_disabled(self.spark, self.termination):
+            for step in range(self.last + 1, until + 1):
+                check_termination(self.spark, self.termination, step)
+                self._rec = {
+                    "superstep": step, "secs": None, "changed": None,
+                    "checkpointed": False,
+                }
+                self._t = time.time()
+                yield step
+                if self.converged:
+                    return
+
+    def record(self, changed: int | None, converged: bool = False, **extras) -> None:
+        """Close the current superstep's history record: its seconds,
+        the kernel's changed count (None where it takes none) and named
+        extras."""
+        self._rec.update(secs=round(time.time() - self._t, 2), changed=changed, **extras)
+        self.history.append(self._rec)
+        self.last = self._rec["superstep"]
+        self.converged = converged
+
+    def stats(self, **kernel) -> dict:
+        """The kernel's own stats plus the common keys."""
+        return {
+            **kernel,
+            "iterations": self.last,
+            "didConverge": self.converged,
+            "computeMillis": int((time.time() - self.t0) * 1000),
+            "history": self.history,
+            "checkpoints": self.checkpoints,
+        }
 
     def _gc(self, keep: int) -> None:
         steps = sorted(
@@ -269,11 +344,3 @@ class IterationCache:
         )
         for d in steps[:-keep]:
             shutil.rmtree(os.path.join(self.checkpoint_dir, d), ignore_errors=True)
-
-    def close(self) -> None:
-        if self._prev is not None:
-            try:
-                self._prev.unpersist()
-            except Exception:
-                pass
-            self._prev = None

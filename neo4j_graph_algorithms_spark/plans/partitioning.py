@@ -1,104 +1,17 @@
-"""Explicit partitioning / skew primitives.
+"""Distributed ranking without a single-reducer window.
 
-The reference balances superstep work by *degree budget*, not node
-count: a partition consumes nodes until the sum of their out-degrees
-exceeds ``batchSize`` (`impl/PageRank.java:281-309`, rationale :86-95 —
-a node with a very high degree would dominate a node-count batch).
-Power-law link graphs (exactly what a source-repo dependency graph is)
-make this mandatory at 100 TB.
-
-Spark rebuild:
-
-- `degree_budget_partition(edges)` — assigns every edge a `part_id`
-  such that each partition holds ~equal *edge count* while keeping each
-  source's adjacency contiguous (CSR-friendly), except that sources
-  whose degree alone exceeds the budget are **split across partitions**
-  (high-degree vertex splitting — the piece the Java thread partitioner
-  cannot do, and the north rule requires).
-- `split_high_degree(edges, threshold)` — replica-salting of hub
-  *sources* for join-side skew: each hub's out-edges get a replica
-  index so a downstream `repartition`/join fans the hub across
-  reducers; pairs with two-phase aggregation in the kernels.
-
-Scale notes: the edge-offset prefix sum is computed as a *distributed
-two-level scan* — per-node ranks inside hash buckets (parallel windows)
-plus a tiny per-bucket base table joined back broadcast — never a
-single global window, so there is no one-reducer bottleneck at 10^12
-rows. All driver-side actions are O(num_buckets) aggregates.
+`distributed_rank` assigns dense zero-based ranks with a *distributed
+two-level scan*: per-bucket ranks inside range buckets (parallel
+windows) plus a tiny per-bucket base table joined back broadcast —
+never a single global window, so there is no one-reducer bottleneck at
+10^12 rows. It backs id densification (`graph.densify_ids`) and MS-BFS
+source numbering.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _with_global_edge_index(edges: DataFrame, src_col: str, n_buckets: int) -> DataFrame:
-    """Add `_gidx`: each edge's position in a total order that keeps
-    every source's adjacency contiguous. Distributed prefix sum:
-
-    1. bucket sources by hash (parallel);
-    2. within-bucket exclusive cumsum of degrees (window per bucket —
-       parallel across buckets);
-    3. per-bucket degree totals -> exclusive bucket bases (tiny table,
-       broadcast join back).
-    """
-    deg = edges.groupBy(src_col).agg(F.count("*").alias("_deg"))
-    deg = deg.withColumn("_bkt", F.pmod(F.xxhash64(src_col), F.lit(n_buckets)))
-    w_in = (
-        Window.partitionBy("_bkt")
-        .orderBy(src_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    deg = deg.withColumn("_in_off", F.coalesce(F.sum("_deg").over(w_in), F.lit(0)))
-    bases = (
-        deg.groupBy("_bkt")
-        .agg(F.sum("_deg").alias("_bt"))
-        .withColumn(
-            "_base",
-            F.coalesce(
-                F.sum("_bt").over(
-                    Window.orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("_bkt", "_base")
-    )  # n_buckets rows — the only tiny global window
-    src_off = (
-        deg.join(F.broadcast(bases), "_bkt")
-        .select(F.col(src_col), (F.col("_in_off") + F.col("_base")).alias("_soff"))
-    )
-    w_rank = Window.partitionBy(src_col).orderBy("dst")
-    return (
-        edges.join(src_off, src_col)
-        .withColumn("_gidx", F.col("_soff") + F.row_number().over(w_rank) - 1)
-        .drop("_soff")
-    )
-
-
-def degree_budget_partition(
-    edges: DataFrame,
-    num_partitions: int,
-    src_col: str = "src",
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Assign `part_id` by cumulative out-degree, splitting hubs.
-
-    Partition k covers global edge-index range [k*budget, (k+1)*budget):
-    ~equal edges per partition; a source with degree > budget spans
-    several part_ids, so its scatter work is parallelized instead of
-    hot-spotting one partition. Returns the input with `part_id` added,
-    repartitioned on it. Computed ONCE at load, amortized over all
-    supersteps.
-    """
-    total = edges.count()
-    budget = max(1, (total + num_partitions - 1) // num_partitions)
-    with_idx = _with_global_edge_index(edges, src_col, min(n_buckets, max(1, total)))
-    out = with_idx.withColumn(
-        "part_id", (F.col("_gidx") / F.lit(budget)).cast("int")
-    ).drop("_gidx")
-    return out.repartition(num_partitions, "part_id")
 
 
 def distributed_rank(
@@ -148,29 +61,4 @@ def distributed_rank(
     return (
         ranked.join(F.broadcast(bases), "_bkt")
         .select(F.col(col), (F.col("_r_in") + F.col("_base")).cast("long").alias("_rank"))
-    )
-
-
-def split_high_degree(
-    edges: DataFrame,
-    threshold: int,
-    replicas: int = 8,
-    src_col: str = "src",
-) -> DataFrame:
-    """Add `replica` (0 for normal sources; 0..replicas-1 spread for
-    hubs with out-degree > threshold). Downstream kernels include
-    `replica` in their shuffle key, then reduce over it — explicit
-    two-phase aggregation for hub fan-out."""
-    deg = edges.groupBy(src_col).agg(F.count("*").alias("_deg"))
-    w = Window.partitionBy(src_col).orderBy("dst")
-    return (
-        edges.join(deg, src_col)
-        .withColumn(
-            "replica",
-            F.when(
-                F.col("_deg") > threshold,
-                F.pmod(F.row_number().over(w), F.lit(replicas)),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("_deg")
     )

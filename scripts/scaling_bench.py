@@ -61,9 +61,6 @@ if kernel == "pagerank":
     t0 = time.time()
     _r, stats = pagerank(g, max_iterations=supersteps, fuse=5, num_partitions=parts)
     dt = time.time() - t0
-    step_seconds = [h["secs"] for h in stats["history"]]
-    fold_steps = [h["superstep"] for h in stats["history"] if h["folded"]]
-    iters = stats["iterations"]
 elif kernel == "wcc":
     from neo4j_graph_algorithms_spark.operators.wcc import wcc
     # the synthetic chain+hub edge set has no reciprocal duplicates,
@@ -73,17 +70,11 @@ elif kernel == "wcc":
     _c, stats = wcc(g, max_iterations=supersteps, assume_deduped=True,
                     num_partitions=parts)
     dt = time.time() - t0
-    # per-superstep durations from the IterationCache meta timestamps.
-    # ts marks the START of each step's materialization, so diff i
-    # covers superstep i end-to-end (shifted by one); the FIRST diff is
-    # the O(V) init materialization, not a superstep — dropped, else it
-    # pollutes the fastest-step floor with a latency-bound entry
-    ts = [h["ts"] for h in stats["history"]]
-    step_seconds = [round(ts[i] - ts[i-1], 3) for i in range(2, len(ts))]
-    fold_steps = []
-    iters = stats["iterations"]
 else:
     raise SystemExit(f"unknown kernel {kernel}")
+step_seconds = [h["secs"] for h in stats["history"]]
+fold_steps = [h["superstep"] for h in stats["history"] if h.get("folded")]
+iters = stats["iterations"]
 plain = sorted(s for i, s in enumerate(step_seconds, start=1) if i not in set(fold_steps))
 median = plain[len(plain) // 2]
 print(json.dumps({"cpus": cpus, "kernel": kernel, "n_edges": n_edges,

@@ -223,10 +223,10 @@ def test_sessionize_hand_fixture(spark):
 
 
 def test_wcc_pointer_jump_modes_identical_components(spark):
-    """The min-label fixpoint is jump-agnostic: True / 'auto' / False
-    all converge to the identical component assignment (jumping only
-    changes ROUND COUNT — asserted: no-jump takes strictly more rounds
-    on a path, where chain compression is the whole game)."""
+    """The min-label fixpoint is jump-agnostic: True / False converge
+    to the identical component assignment (jumping only changes ROUND
+    COUNT — asserted: no-jump takes strictly more rounds on a path,
+    where chain compression is the whole game)."""
     from neo4j_graph_algorithms_spark.operators.wcc import wcc
 
     rows = [(i, i + 1) for i in range(40)]  # diameter-40 path
@@ -234,11 +234,11 @@ def test_wcc_pointer_jump_modes_identical_components(spark):
     g = _graph(spark, rows)
     results = {}
     rounds = {}
-    for mode in (True, "auto", False):
+    for mode in (True, False):
         comp, st = wcc(g, max_iterations=100, pointer_jump=mode)
         results[str(mode)] = sorted((r.id, r.component) for r in comp.collect())
         rounds[str(mode)] = st["iterations"]
-    assert results["True"] == results["auto"] == results["False"]
+    assert results["True"] == results["False"]
     assert rounds["False"] > rounds["True"]
 
 
@@ -266,7 +266,7 @@ def test_kcore_resume_matches_uninterrupted(spark, tmp_path):
     resumed, stats = core_decomposition(
         g, checkpoint_dir=ck, checkpoint_every=4, resume=True
     )
-    assert stats["history"][0]["round"] == 5  # really resumed
+    assert stats["history"][0]["superstep"] == 5  # really resumed
     got = {r.id: r.core for r in resumed.collect()}
     assert got == expected
 
@@ -289,8 +289,8 @@ def test_neighborhood_resume_matches_uninterrupted(spark, tmp_path):
     resumed, stats = neighborhood_function(
         g, max_depth=6, p=6, checkpoint_dir=ck, checkpoint_every=3, resume=True
     )
-    assert stats["history"][0]["depth"] == 1  # restored history intact
-    assert stats["history"][3]["depth"] == 4  # and continued from 4
+    assert stats["history"][0]["superstep"] == 1  # restored history intact
+    assert stats["history"][3]["superstep"] == 4  # and continued from 4
     got = sorted(resumed.collect())
     assert [r.depth for r in got] == [r.depth for r in expected]
     for a, b in zip(got, expected):
